@@ -65,15 +65,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    # under spark-submit the master/executors come from the submit command;
-    # standalone invocation falls back to local defaults
-    spark = (
-        SparkSession.builder.appName("cdc-ingest")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from tickers_daily_intraday_etl_spark.session import ENGINE_CONF
+
+    # under spark-submit the master/executors and sizing come from the
+    # submit command; standalone invocation falls back to local defaults
+    spark = SparkSession.builder.appName("cdc-ingest").config(map=ENGINE_CONF).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA, CDC_SCHEMA_V2

@@ -4,10 +4,12 @@ epoch fencing, schema evolution through merge, lineage records."""
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tickers_daily_intraday_etl_spark.cdc import merge as M
 from tickers_daily_intraday_etl_spark.cdc.merge import merge_into
 from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA, CDC_SCHEMA_V2, TARGET_SCHEMA
 from tickers_daily_intraday_etl_spark.lake import LakeTable
@@ -144,12 +146,58 @@ def test_lineage_manifest_recorded(spark, tmpdir_path):
     assert entry.manifest["batch_id"] == 0
 
 
+ZERO_ROW_CASES = [(m, s) for m in ("cow", "mor") for s in (CDC_SCHEMA, CDC_SCHEMA_V2)]
+
+
+def _assert_fence_only(t, version, batch_id, schema):
+    entry = t.log.read_entry(version)
+    assert entry.adds == [] and entry.removes == []
+    assert entry.manifest == {"batch_id": batch_id, "rows_in": 0}
+    # the batch's schema evolves the table even though no row landed
+    assert ("source_version" in t.user_schema().names) == (schema is CDC_SCHEMA_V2)
+
+
 def test_empty_batch_records_epoch(spark, tmpdir_path):
-    t = _table(spark, tmpdir_path)
-    empty = spark.createDataFrame([], CDC_SCHEMA)
-    m = merge_into(t, empty, batch_id=5)
-    assert m["rows_in"] == 0
-    assert 5 in t.committed_batch_ids()
+    """Every mode commits a zero-row batch as ONE fence-only entry under
+    the batch's evolved schema (merge-on-read used to fail reading the
+    Observation Spark never delivers for an empty plan; copy-on-write
+    dropped a V2 batch's new column)."""
+    for mode, schema in ZERO_ROW_CASES:
+        t = LakeTable.create_if_not_exists(
+            spark, os.path.join(tmpdir_path, f"{mode}-{len(schema)}"), TARGET_SCHEMA, num_buckets=4
+        )
+        merge_into(t, spark.createDataFrame([_ev("I", "a", 1, tokens=[1])], CDC_SCHEMA), batch_id=0)
+        live_before = dict(t.log.snapshot().live_files)
+        empty = spark.createDataFrame([], schema)
+        m = merge_into(t, empty, batch_id=5, mode=mode)
+        assert m == {"batch_id": 5, "rows_in": 0, "version": 2, "skipped": False}
+        assert 5 in t.committed_batch_ids()
+        _assert_fence_only(t, m["version"], 5, schema)
+        assert t.log.snapshot().live_files == live_before
+        assert merge_into(t, empty, batch_id=5, mode=mode)["skipped"] is True
+        assert t.log.latest_version() == 2
+        assert _state(t) == {"a": [1]}
+
+
+@pytest.mark.parametrize(
+    "mode,schema", ZERO_ROW_CASES, ids=["cow-v1", "cow-v2", "mor-v1", "mor-v2"]
+)
+def test_zero_row_segment_through_pipeline(spark, tmpdir_path, mode, schema):
+    """A zero-row feed segment drains through CdcPipeline in every mode
+    (a merge-on-read stream used to die with STREAM_FAILED on it)."""
+    from tickers_daily_intraday_etl_spark.sources.changefeed import write_feed
+    from tickers_daily_intraday_etl_spark.streaming import CdcPipeline
+
+    feed = os.path.join(tmpdir_path, "feed")
+    write_feed(spark.createDataFrame([], schema), feed, fmt="parquet")
+    pipe = CdcPipeline(
+        spark, feed, os.path.join(tmpdir_path, "t"), os.path.join(tmpdir_path, "c"),
+        feed_schema=schema, target_schema=TARGET_SCHEMA, num_buckets=4, merge_mode=mode,
+    )
+    lineage = pipe.run_available_now()
+    assert [(m["rows_in"], m["skipped"]) for m in lineage] == [(0, False)]
+    _assert_fence_only(pipe.table, lineage[0]["version"], lineage[0]["batch_id"], schema)
+    assert pipe.table.read().count() == 0
 
 
 def test_merge_schema_widening_int_to_long(spark, tmpdir_path):
@@ -229,8 +277,6 @@ def test_merge_retries_after_concurrent_conflict(spark, tmpdir_path):
 
     table._commit = racing_commit2
     try:
-        import pytest
-
         with pytest.raises(ConcurrentModificationError):
             merge_into(table, spark.createDataFrame(
                 [_ev("I", "e", 5, tokens=[5])], CDC_SCHEMA),
@@ -240,9 +286,7 @@ def test_merge_retries_after_concurrent_conflict(spark, tmpdir_path):
 
 
 # --------------------------------------------------------- crash injection
-def _crash_case(spark, tmpdir_path, mode):
-    import pytest as _pytest
-
+def _crash_case(spark, tmpdir_path, mode, dense=False):
     from tickers_daily_intraday_etl_spark.lake.maintenance import vacuum
 
     t = _table(spark, tmpdir_path)
@@ -261,7 +305,7 @@ def _crash_case(spark, tmpdir_path, mode):
 
     t.log.try_commit = boom
     batch = spark.createDataFrame([_ev("U", "a", 3, ts_s=1, tokens=[9])], CDC_SCHEMA)
-    with _pytest.raises(RuntimeError, match="simulated crash"):
+    with pytest.raises(RuntimeError, match="simulated crash"):
         merge_into(t, batch, batch_id=1, mode=mode)
     t.log.try_commit = orig
 
@@ -277,6 +321,8 @@ def _crash_case(spark, tmpdir_path, mode):
     # 3. re-run of the same batch_id lands exactly once
     m1 = merge_into(t, batch, batch_id=1, mode=mode)
     assert not m1.get("skipped")
+    if dense:
+        assert m1["affected_buckets"] == list(range(t.num_buckets))
     assert _state(t) == {"a": [9], "b": [2]}
     m2 = merge_into(t, batch, batch_id=1, mode=mode)
     assert m2.get("skipped")  # epoch fence
@@ -291,8 +337,20 @@ def test_crash_before_commit_mor(spark, tmpdir_path):
     _crash_case(spark, tmpdir_path, "mor")
 
 
+def test_crash_before_commit_dense_cow(spark, tmpdir_path, monkeypatch):
+    _force_dense(monkeypatch)
+    _crash_case(spark, tmpdir_path, "cow", dense=True)
+
+
 # ---------------------------------------------------------------- dense path
-def test_dense_merge_matches_sparse_merge(spark, tmpdir_path):
+def _force_dense(monkeypatch):
+    """Make the metadata row estimate clear the dense threshold, so every
+    copy-on-write merge skips the pruning pre-scan and observes its op
+    counts during the write (the plan a large bulk batch takes)."""
+    monkeypatch.setattr(M, "_estimated_rows", lambda changes: 10**9)
+
+
+def test_dense_merge_matches_sparse_merge(spark, tmpdir_path, monkeypatch):
     """The dense (Observation-fused, no pre-scan) CoW path must produce
     the identical final state, op counts and rows_in as the pruning
     path on the same batches."""
@@ -302,6 +360,8 @@ def test_dense_merge_matches_sparse_merge(spark, tmpdir_path):
         [_ev("I", f"d{i}", i + 1, tokens=[i]) for i in range(40)],
         [_ev("U", f"d{i}", 100 + i, ts_s=1, tokens=[i, i]) for i in range(0, 40, 2)]
         + [_ev("D", f"d{i}", 200 + i, ts_s=2) for i in range(0, 40, 5)],
+        # one key: the sparse path prunes to its bucket, dense rewrites all
+        [_ev("U", "d1", 300, ts_s=3, tokens=[7])],
     ]
     t_sparse = LakeTable.create_if_not_exists(
         spark, _os.path.join(tmpdir_path, "sparse"), TARGET_SCHEMA, num_buckets=4
@@ -311,14 +371,18 @@ def test_dense_merge_matches_sparse_merge(spark, tmpdir_path):
     )
     for b, rows in enumerate(batches):
         df = spark.createDataFrame(rows, CDC_SCHEMA)
-        m_s = merge_into(t_sparse, df, batch_id=b, dense=False)
-        m_d = merge_into(t_dense, df, batch_id=b, dense=True)
+        m_s = merge_into(t_sparse, df, batch_id=b)
+        with monkeypatch.context() as mp:
+            _force_dense(mp)
+            m_d = merge_into(t_dense, df, batch_id=b)
+        assert m_d["affected_buckets"] == [0, 1, 2, 3]
         assert m_s["rows_in"] == m_d["rows_in"]
         assert m_s["op_counts"] == m_d["op_counts"]
+    assert len(m_s["affected_buckets"]) == 1
     assert _state(t_sparse) == _state(t_dense)
 
 
-def test_dense_merge_through_streaming_pipeline(spark, tmpdir_path):
+def test_dense_merge_through_streaming_pipeline(spark, tmpdir_path, monkeypatch):
     """Round-4 regression: the dense path's Observation must complete
     inside foreachBatch (the batch df lives in a CLONED session; the
     merge's union must keep the batch side on the left so the write
@@ -326,7 +390,6 @@ def test_dense_merge_through_streaming_pipeline(spark, tmpdir_path):
     the other way round deadlocks obs.get forever)."""
     import os as _os
 
-    from tickers_daily_intraday_etl_spark.cdc import merge as M
     from tickers_daily_intraday_etl_spark.sources.changefeed import write_feed
     from tickers_daily_intraday_etl_spark.streaming import CdcPipeline
 
@@ -334,22 +397,59 @@ def test_dense_merge_through_streaming_pipeline(spark, tmpdir_path):
     rows = [_ev("I", f"d{i % 10}", i + 1, tokens=[i]) for i in range(20)]
     write_feed(spark.createDataFrame(rows, CDC_SCHEMA), feed, fmt="parquet")
 
-    orig = M._merge_once
-
-    def force_dense(table, changes, batch_id, salt, extra, mode, dense=None, *a, **kw):
-        return orig(table, changes, batch_id, salt, extra, mode, True, *a, **kw)
-
-    M._merge_once = force_dense
-    try:
-        pipe = CdcPipeline(
-            spark, feed, _os.path.join(tmpdir_path, "t"),
-            _os.path.join(tmpdir_path, "c"), num_buckets=4,
-        )
-        lineage = pipe.run_available_now()
-    finally:
-        M._merge_once = orig
+    _force_dense(monkeypatch)
+    pipe = CdcPipeline(
+        spark, feed, _os.path.join(tmpdir_path, "t"),
+        _os.path.join(tmpdir_path, "c"), num_buckets=4,
+    )
+    lineage = pipe.run_available_now()
     assert [m.get("rows_in") for m in lineage] == [20]
+    assert lineage[0]["affected_buckets"] == [0, 1, 2, 3]
     assert {r.doc_id for r in pipe.table.read().collect()} == {f"d{i}" for i in range(10)}
+
+
+def test_manifest_keys_per_plan_variant(spark, tmpdir_path, monkeypatch):
+    """Pins the manifest each plan variant commits (sparse CoW, dense
+    CoW, MoR): the lineage contract that cdc_lineage_metrics and the
+    benchmark read.  The committed manifest is the returned one minus
+    the post-commit ``version``/``skipped``."""
+    cow_keys = {
+        "batch_id", "rows_in", "timings_sec", "op_counts", "affected_buckets",
+        "rows_before", "rows_after", "files_removed", "files_added",
+    }
+    mor_keys = {
+        "batch_id", "mode", "rows_in", "timings_sec", "op_counts",
+        "affected_buckets", "files_removed", "files_added", "rows_written",
+    }
+    t = _table(spark, tmpdir_path)
+
+    def batch(lsn):
+        return spark.createDataFrame(
+            [_ev("I", "a", lsn, ts_s=lsn, tokens=[lsn]), _ev("U", "b", lsn, ts_s=lsn, tokens=[lsn])],
+            CDC_SCHEMA,
+        )
+
+    sparse = merge_into(t, batch(1), batch_id=0)
+    mor = merge_into(t, batch(2), batch_id=1, mode="mor")
+    live = len(t.log.snapshot().live_files)
+    with monkeypatch.context() as mp:
+        _force_dense(mp)
+        dense = merge_into(t, batch(3), batch_id=2)
+    for m, keys in ((sparse, cow_keys), (dense, cow_keys), (mor, mor_keys)):
+        assert set(m) == keys | {"version", "skipped"}
+        assert set(m["timings_sec"]) == {"stats", "plan", "write"}
+        assert m["rows_in"] == 2 and m["op_counts"] == {"I": 1, "U": 1}
+        committed = t.log.read_entry(m["version"]).manifest
+        assert committed == {k: v for k, v in m.items() if k not in ("version", "skipped")}
+    buckets = sorted({int(b) for b in sparse["rows_after"]})
+    assert sparse["affected_buckets"] == buckets and sparse["rows_before"] == {}
+    assert sparse["files_removed"] == 0 and sparse["files_added"] == len(buckets)
+    assert mor["mode"] == "mor" and mor["affected_buckets"] == buckets
+    assert mor["files_removed"] == 0 and mor["rows_written"] == 2
+    assert dense["affected_buckets"] == [0, 1, 2, 3]
+    assert dense["files_removed"] == live and dense["files_added"] == len(buckets)
+    assert sum(dense["rows_after"].values()) == 2
+    assert _state(t) == {"a": [3], "b": [3]}
 
 
 def test_estimated_rows_boundaries(spark, tmpdir_path):
@@ -374,12 +474,13 @@ def test_estimated_rows_boundaries(spark, tmpdir_path):
     assert est_file is not None and 100 <= est_file <= 500_000
 
 
-def test_dense_merge_with_schema_evolution(spark, tmpdir_path):
+def test_dense_merge_with_schema_evolution(spark, tmpdir_path, monkeypatch):
     """Dense path + schema-merge-on-write together: the Observation
     fusion must not bypass the evolution handling (new column appears,
     old rows read back NULL-filled)."""
     import os as _os
 
+    _force_dense(monkeypatch)
     t = LakeTable.create_if_not_exists(
         spark, _os.path.join(tmpdir_path, "t"), TARGET_SCHEMA, num_buckets=4
     )
@@ -387,15 +488,13 @@ def test_dense_merge_with_schema_evolution(spark, tmpdir_path):
         t,
         spark.createDataFrame([_ev("I", f"d{i}", i + 1, tokens=[i]) for i in range(8)], CDC_SCHEMA),
         batch_id=0,
-        dense=True,
     )
     evolved = [
         _ev("U", f"d{i}", 100 + i, ts_s=1, tokens=[i, i], source_version=2)
         for i in range(0, 8, 2)
     ]
-    m = merge_into(
-        t, spark.createDataFrame(evolved, CDC_SCHEMA_V2), batch_id=1, dense=True
-    )
+    m = merge_into(t, spark.createDataFrame(evolved, CDC_SCHEMA_V2), batch_id=1)
+    assert m["affected_buckets"] == [0, 1, 2, 3]
     assert m["op_counts"] == {"U": 4}
     out = {r.doc_id: r for r in t.read().collect()}
     assert out["d0"].source_version == 2 and out["d0"].tokens == [0, 0]

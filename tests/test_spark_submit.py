@@ -57,6 +57,11 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmpdir_path):
         for _, r in oracle.iterrows()
     }
     assert got == exp
+    # the deploy session writes micros timestamps, so every add-record
+    # carries the _commit_ts zone map (INT96 columns have no statistics)
+    adds = [a for v in t.log.versions() for a in t.log.read_entry(v).adds]
+    assert adds
+    assert all("_commit_ts" in a.get("stats", {}) for a in adds), adds
 
     # resubmit on the same checkpoint: resume, nothing reapplied
     rec2 = _submit(feed, table, ckpt)

@@ -16,20 +16,20 @@ Scale notes:
   ``groupBy(key)``) guards the pathological case where a single key
   dominates entire input partitions — the reduce fan-in per key drops
   from #input-partitions to #salts.
-* ``cluster_col`` is the bytes/event lever for the MERGE write path: the
-  aggregation is clustered on the storage-bucket column instead of the
-  key, via ONE explicit ``repartition(n, bucket)`` below the groupBy.
+* ``cluster_col`` is the MERGE write path's shape: the aggregation is
+  clustered on the storage-bucket column instead of the key, via ONE
+  explicit ``repartition(n, bucket)`` below the groupBy.
   ``HashPartitioning(bucket)`` satisfies the ``groupBy(bucket, key)``
   clustering requirement (bucket is a pure function of key, and the
   partitioning expressions are a subset of the grouping keys), so
   Catalyst inserts NO second exchange — and because the output is
   already partitioned by bucket, the bucket-partitioned write that
-  follows needs no repartition either.  Net: the full row payload
-  (token arrays) crosses exactly ONE shuffle per merge instead of two
-  (three with salting), which is the floor for a copy-on-write rewrite
-  — every output byte must reach its bucket's writer task at least
-  once.  On a memory-bandwidth-bound host this halves the merge's
-  traffic through the memory subsystem (see BENCH/roofline.md).
+  follows needs no repartition either.  The full row payload (token
+  arrays) crosses exactly ONE shuffle per merge, the floor for a
+  copy-on-write rewrite: every output byte must reach its bucket's
+  writer task at least once (BENCH/shuffle_bytes.md has the
+  measurement).  The plain ``groupBy(key)`` form serves the read side
+  (``read_resolved``, ``lookup``) and ``lww_dedup``.
 """
 
 from __future__ import annotations

@@ -18,6 +18,33 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Settings the engine's results or its on-disk format depend on, applied
+# by every session builder (``get_spark`` and the spark-submit entry
+# ``run_pipeline.py``).  Sizing and deployment settings (shuffle
+# partitions, memory, UI) stay out: builder config overrides
+# ``spark-submit --conf``, and those belong to the deployment.
+ENGINE_CONF: dict[str, str] = {
+    # results compare bit-for-bit against the DuckDB oracle
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # every Python-side kernel is a vectorized pandas UDF
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # INT96 (Spark's legacy default) carries NO parquet column
+    # statistics; micros-typed timestamps do — required for the commit
+    # log's zone-map (min,max) file skipping
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    # a pruned lake-table read passes an explicit file list; above this
+    # threshold Spark launches a DISTRIBUTED LISTING JOB per read (default
+    # 32 paths) — pure fixed cost per micro-batch (~0.4s measured for a
+    # 128-file target read).  Driver-side listing of an explicit path list
+    # is metadata-only; keep it local.  (On a real object-store deployment
+    # with millions of files per read, lower this again.)
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "100000",
+}
+
 
 def get_spark(
     app_name: str = "cdc-engine",
@@ -37,11 +64,6 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # parquet + shuffle codecs are tunable: zstd trades CPU per byte
         # for fewer bytes through the memory subsystem — the relevant
         # trade on bandwidth-bound hosts (see BENCH/BASELINE.md)
@@ -53,24 +75,10 @@ def get_spark(
             "spark.io.compression.codec",
             os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
         )
-        # INT96 (Spark's legacy default) carries NO parquet column
-        # statistics; micros-typed timestamps do — required for the
-        # commit log's zone-map (min,max) file skipping
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # a pruned lake-table read passes an explicit file list; above
-        # this threshold Spark launches a DISTRIBUTED LISTING JOB per
-        # read (default 32 paths) — pure fixed cost per micro-batch
-        # (~0.4s measured for a 128-file target read).  Driver-side
-        # listing of an explicit path list is metadata-only; keep it
-        # local.  (On a real object-store deployment with millions of
-        # files per read, lower this again.)
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
+        .config(map={**ENGINE_CONF, **(extra_conf or {})})
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
