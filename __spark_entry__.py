@@ -16,14 +16,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _shielded(fn):
-    """The driver supplies its own SparkSession; ship the engine package
-    to its executors first (pandas-UDF/stateful queries pickle references
-    to the package, which workers cannot import unless the driver's cwd
-    happens to be the repo root)."""
+    """The driver supplies its own SparkSession; apply the engine's
+    settings to it (UTC, micros-typed parquet timestamps, ...) and ship
+    the engine package to its executors first (pandas-UDF/stateful
+    queries pickle references to the package, which workers cannot
+    import unless the driver's cwd happens to be the repo root)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from tickers_daily_intraday_etl_spark.session import _ship_package
+        from tickers_daily_intraday_etl_spark.session import _ship_package, apply_engine_conf
 
+        apply_engine_conf(spark)
         _ship_package(spark)
         return fn(spark, sf_dir)
 

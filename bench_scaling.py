@@ -102,13 +102,10 @@ def worker(cpus: int, feed_dir: str, work_dir: str) -> None:
 
     # everything on tmpfs: in local mode all shuffle/table/feed I/O funnels
     # through ONE shared virtual disk, serializing what a real cluster
-    # spreads over per-executor NVMe; tmpfs is the sandbox equivalent
-    spark = get_spark(
-        f"cdc-scaling-{cpus}",
-        cpus=cpus,
-        shuffle_partitions=cpus,
-        extra_conf={"spark.local.dir": os.path.join(work_dir, "spark-local")},
-    )
+    # spreads over per-executor NVMe; tmpfs is the sandbox equivalent.
+    # The worker is its own process, so the variable reaches only its JVM.
+    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work_dir, "spark-local")
+    spark = get_spark(f"cdc-scaling-{cpus}", cpus=cpus, shuffle_partitions=cpus)
     # JIT warm-up: a fresh JVM spends tens of seconds interpreting /
     # compiling the whole pipeline, and that cost does NOT scale with
     # task threads — measuring it flattens any core-count comparison.
@@ -332,8 +329,9 @@ def main() -> None:
         "run_detail": {str(c): v for c, v in run_detail.items()},
         "quiet_gate_busy_cores": QUIET_GATE_CORES,
         "all_runs_clean": all(d["clean"] for v in run_detail.values() for d in v),
-        "parquet_codec": os.environ.get("SPARK_GRAFT_CODEC", "snappy"),
-        "shuffle_codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
+        # the engine leaves both codecs at Spark's defaults
+        "parquet_codec": "snappy",
+        "shuffle_codec": "lz4",
         "cpu_pinned": PIN_CPUS,
         "hw_capacity_ratio": round(hw_ratio, 2),
         "membw_ratio": round(membw_ratio, 2),

@@ -65,11 +65,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from tickers_daily_intraday_etl_spark.session import ENGINE_CONF
+    from tickers_daily_intraday_etl_spark.session import apply_engine_conf
 
     # under spark-submit the master/executors and sizing come from the
     # submit command; standalone invocation falls back to local defaults
-    spark = SparkSession.builder.appName("cdc-ingest").config(map=ENGINE_CONF).getOrCreate()
+    spark = apply_engine_conf(SparkSession.builder.appName("cdc-ingest").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
     from tickers_daily_intraday_etl_spark.cdc.schemas import CDC_SCHEMA, CDC_SCHEMA_V2

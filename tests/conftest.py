@@ -8,7 +8,7 @@ from tickers_daily_intraday_etl_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("cdc-engine-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("cdc-engine-tests")
     yield s
     s.stop()
 

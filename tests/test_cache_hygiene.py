@@ -4,6 +4,7 @@ generation of internal caches, and release_caches() drops them all."""
 
 from pyspark.sql import Row
 
+from tickers_daily_intraday_etl_spark.functions import dedupe, similarity
 from tickers_daily_intraday_etl_spark.functions._cache import release_caches
 from tickers_daily_intraday_etl_spark.functions.dedupe import (
     connected_components,
@@ -70,3 +71,23 @@ def test_connected_components_releases_round_persists(spark):
         connected_components(nodes, pairs, "doc_id").count()
     release_caches()
     assert _n_cached(spark) <= base + 1  # localCheckpoint RDDs are cleaned by GC, allow slack
+
+
+def test_kernel_caches_are_bounded(spark):
+    """Kernel factories keep at most ``maxsize`` UDFs however many
+    distinct parameters callers pass (hyperplane kernels are keyed on
+    the full matrix: every fresh seed is a new key)."""
+    from pyspark.sql import functions as F
+
+    factories = (similarity._bucket_kernel, dedupe._shingle_udf, dedupe._simhash_udf)
+    for factory in factories:
+        factory.cache_clear()
+    bound = similarity._bucket_kernel.cache_info().maxsize
+    for seed in range(bound + 5):
+        similarity.hyperplane_lsh_bucket(F.col("v"), similarity.make_hyperplanes(4, 3, seed=seed))
+    for k in range(1, bound + 6):
+        dedupe.word_shingles(F.col("text"), k)
+        dedupe._simhash_udf(k)
+    for factory in factories:
+        info = factory.cache_info()
+        assert info.currsize <= info.maxsize

@@ -475,9 +475,9 @@ def test_fan_out_small_window_bounds(spark):
 
 
 def test_connected_components_restores_shuffle_partitions(spark):
-    """The CC loop's edge-count-sized shuffle-width override (round 6)
-    must restore the session setting afterwards — including when the
-    loop raises (non-convergence)."""
+    """The CC loop sizes its exchanges from the edge count without
+    touching the session setting — which is unchanged afterwards, also
+    when the loop raises (non-convergence)."""
     from pyspark.sql import functions as F
 
     from tickers_daily_intraday_etl_spark.functions.dedupe import connected_components
@@ -517,3 +517,21 @@ def test_word_shingles_null_and_order(spark):
     assert rows[2] == []  # NULL text -> empty array, matching the old when/otherwise
     assert rows[3] == ["x y"]
     assert rows[4] == ["p q", "q p"]
+
+
+def test_seq_dot_fold_order_ignores_builtin_sum(monkeypatch):
+    """``_seq_dot`` must be the plain left-to-right fold even where
+    builtin ``sum()`` is compensated (Python >= 3.12 uses Neumaier
+    summation): 1e16 + 1.0 rounds back to 1e16, so the fold gives 0.0
+    where a compensated sum gives 1.0."""
+
+    def neumaier_sum(xs, start=0.0):
+        s, c = start, 0.0
+        for x in xs:
+            t = s + x
+            c += (s - t) + x if abs(s) >= abs(x) else (x - t) + s
+            s = t
+        return s + c
+
+    monkeypatch.setattr(similarity, "sum", neumaier_sum, raising=False)
+    assert similarity._seq_dot([1e16, 1.0, -1e16], [1.0, 1.0, 1.0]) == 0.0

@@ -13,6 +13,8 @@ Hashes use the oracle-parity form (md5 hex -> 60-bit int, see
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -50,9 +52,7 @@ def distinct_by_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- shingles
-_SHINGLE_UDFS: dict = {}
-
-
+@functools.lru_cache(maxsize=16)
 def _shingle_udf(k: int):
     """Vectorized shingle kernel (pandas UDF, one per k): joins
     JVM-produced token arrays into distinct k-word shingles.
@@ -66,9 +66,6 @@ def _shingle_udf(k: int):
     cross the boundary — the kernel only ``' '.join``s adjacent tokens
     (== concat_ws(' ')) and dedups with first-occurrence order
     (== array_distinct)."""
-    if k in _SHINGLE_UDFS:
-        return _SHINGLE_UDFS[k]
-
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def kernel(tok: pd.Series) -> pd.Series:
         def one(ts):
@@ -78,7 +75,6 @@ def _shingle_udf(k: int):
 
         return tok.map(one)
 
-    _SHINGLE_UDFS[k] = kernel
     return kernel
 
 
@@ -308,15 +304,80 @@ def connected_components(
     # scheduling per stage per round (measured 10.2s for 3 rounds over
     # 16k edges at 32 partitions; 3.5s at the sized width).  Clamped at
     # the session setting, so a 10^9-edge graph keeps full parallelism.
-    spark = E.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    loop_parts = max(1, min(int(old_parts), -(-n_edges // 200_000)))
-    spark.conf.set(conf_key, str(loop_parts))
-    try:
-        converged, E, rounds = _cc_loop(E, rounds, converged, max_iters)
-    finally:
-        spark.conf.set(conf_key, old_parts)
+    # The width is passed to the loop's own exchanges, never set on the
+    # session: a query planned concurrently on the same session keeps
+    # the session's width.
+    session_parts = int(E.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    loop_parts = max(1, min(session_parts, -(-n_edges // 200_000)))
+    for _ in range(max_iters):
+        if converged:
+            break
+        rounds += 1
+        # ---- large-star ----
+        # One explicit repartition on the star root serves BOTH the
+        # groupBy-min (clustering satisfied, aggregate exchange elided —
+        # the same Catalyst property the merge path's clustered LWW
+        # exploits) and the min-attach join (both sides inherit the same
+        # HashPartitioning, so the join plans no exchange of its own):
+        # the edge set crosses the wire once per star instead of twice —
+        # 5 exchanges/round -> 3 (guide §2.4 "share one exchange").
+        sym = E.unionByName(E.select(F.col("v").alias("u"), F.col("u").alias("v"))).repartition(
+            loop_parts, F.col("u")
+        )
+        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        # no distinct here: the small-star groupBy dedups its min
+        # contributions anyway, and the duplicate (b, m) join rows fold
+        # into S's final distinct — one whole edge-set shuffle saved/round
+        large = (
+            sym.where(F.col("v") > F.col("u"))
+            .join(mins, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .where(F.col("u") != F.col("v"))
+        )
+        # ---- small-star (edges of `large` are already child>parent) ----
+        oriented = large.select(
+            F.greatest(F.col("u"), F.col("v")).alias("a"),
+            F.least(F.col("u"), F.col("v")).alias("b"),
+        ).repartition(loop_parts, F.col("a"))
+        mins2 = oriented.groupBy("a").agg(F.min("b").alias("m"))
+        S_raw = (
+            oriented.join(mins2, "a")
+            .select(F.col("b").alias("u"), F.col("m").alias("v"))
+            .unionByName(mins2.select(F.col("a").alias("u"), F.col("m").alias("v")))
+            .where(F.col("u") != F.col("v"))
+        )
+        # ONE shuffle closes the round: tag rows by origin and group by
+        # edge — max(__s)/max(__e) give set membership, so the same
+        # aggregation IS the small-star distinct AND the S-vs-E set
+        # equality check (converged iff no edge is in exactly one set).
+        # The former separate distinct + (+1/-1)-multiset job cost one
+        # extra shuffle and one extra job per round — pure fixed
+        # overhead at small edge counts, and at 10^9 edges one full
+        # extra pass over the edge set.
+        grouped = (
+            S_raw.select("u", "v", F.lit(1).alias("__s"), F.lit(0).alias("__e"))
+            .unionByName(E.select("u", "v", F.lit(0).alias("__s"), F.lit(1).alias("__e")))
+            .repartition(loop_parts, "u", "v")
+            .groupBy("u", "v")
+            .agg(F.max("__s").alias("__in_s"), F.max("__e").alias("__in_e"))
+        )
+        # ONE action closes the round: counting the membership
+        # mismatches populates the persisted round relation as a side
+        # effect (the cache fills on first scan), so no separate
+        # materialization job is needed.  Lineage is truncated with a
+        # checkpoint every other round (that round pays the extra
+        # checkpoint job); in between the in-memory persist carries it.
+        if rounds % 2 == 0:
+            grouped = checkpoint_tracked("connected_components", grouped)
+        else:
+            grouped = persist_tracked("connected_components", grouped)
+        # full count, not isEmpty/limit: the unrestricted scan is what
+        # guarantees every partition of the round relation lands in the
+        # cache in this same job
+        converged = (
+            grouped.where(F.col("__in_s") != F.col("__in_e")).count() == 0
+        )
+        E = grouped.where(F.col("__in_s") == 1).select("u", "v")
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} "
@@ -339,89 +400,8 @@ def connected_components(
     return out
 
 
-def _cc_loop(E: DataFrame, rounds: int, converged: bool, max_iters: int):
-    """The alternating-star rounds of ``connected_components`` (split out
-    so the shuffle-width override wraps exactly the loop's actions)."""
-    from tickers_daily_intraday_etl_spark.functions._cache import (
-        checkpoint_tracked,
-        persist_tracked,
-    )
-
-    for _ in range(max_iters):
-        if converged:
-            break
-        rounds += 1
-        # ---- large-star ----
-        # One explicit repartition on the star root serves BOTH the
-        # groupBy-min (clustering satisfied, aggregate exchange elided —
-        # the same Catalyst property the merge path's clustered LWW
-        # exploits) and the min-attach join (both sides inherit the same
-        # HashPartitioning, so the join plans no exchange of its own):
-        # the edge set crosses the wire once per star instead of twice —
-        # 5 exchanges/round -> 3 (guide §2.4 "share one exchange").
-        sym = E.unionByName(E.select(F.col("v").alias("u"), F.col("u").alias("v"))).repartition(
-            F.col("u")
-        )
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        # no distinct here: the small-star groupBy dedups its min
-        # contributions anyway, and the duplicate (b, m) join rows fold
-        # into S's final distinct — one whole edge-set shuffle saved/round
-        large = (
-            sym.where(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        # ---- small-star (edges of `large` are already child>parent) ----
-        oriented = large.select(
-            F.greatest(F.col("u"), F.col("v")).alias("a"),
-            F.least(F.col("u"), F.col("v")).alias("b"),
-        ).repartition(F.col("a"))
-        mins2 = oriented.groupBy("a").agg(F.min("b").alias("m"))
-        S_raw = (
-            oriented.join(mins2, "a")
-            .select(F.col("b").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins2.select(F.col("a").alias("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-        )
-        # ONE shuffle closes the round: tag rows by origin and group by
-        # edge — max(__s)/max(__e) give set membership, so the same
-        # aggregation IS the small-star distinct AND the S-vs-E set
-        # equality check (converged iff no edge is in exactly one set).
-        # The former separate distinct + (+1/-1)-multiset job cost one
-        # extra shuffle and one extra job per round — pure fixed
-        # overhead at small edge counts, and at 10^9 edges one full
-        # extra pass over the edge set.
-        grouped = (
-            S_raw.select("u", "v", F.lit(1).alias("__s"), F.lit(0).alias("__e"))
-            .unionByName(E.select("u", "v", F.lit(0).alias("__s"), F.lit(1).alias("__e")))
-            .groupBy("u", "v")
-            .agg(F.max("__s").alias("__in_s"), F.max("__e").alias("__in_e"))
-        )
-        # ONE action closes the round: counting the membership
-        # mismatches populates the persisted round relation as a side
-        # effect (the cache fills on first scan), so no separate
-        # materialization job is needed.  Lineage is truncated with a
-        # checkpoint every other round (that round pays the extra
-        # checkpoint job); in between the in-memory persist carries it.
-        if rounds % 2 == 0:
-            grouped = checkpoint_tracked("connected_components", grouped)
-        else:
-            grouped = persist_tracked("connected_components", grouped)
-        # full count, not isEmpty/limit: the unrestricted scan is what
-        # guarantees every partition of the round relation lands in the
-        # cache in this same job
-        converged = (
-            grouped.where(F.col("__in_s") != F.col("__in_e")).count() == 0
-        )
-        E = grouped.where(F.col("__in_s") == 1).select("u", "v")
-    return converged, E, rounds
-
-
 # ----------------------------------------------------------------- SimHash
-_SIMHASH_UDFS: dict = {}
-
-
+@functools.lru_cache(maxsize=16)
 def _simhash_udf(bits: int):
     """Per-document SimHash kernel: bit b of the signature is the sign of
     sum over tokens of (+1 if bit b of hex_hash64('simhash', token) else
@@ -433,9 +413,6 @@ def _simhash_udf(bits: int):
     (guide §2.4/§4.2).  Signature bits above 59 are structurally 0 (the
     token hash carries 60 random bits), so the value fits a signed long
     at any ``bits`` <= 64."""
-    if bits in _SIMHASH_UDFS:
-        return _SIMHASH_UDFS[bits]
-
     @F.pandas_udf("long")
     def kernel(tok: pd.Series) -> pd.Series:
         import hashlib as _h
@@ -459,7 +436,6 @@ def _simhash_udf(bits: int):
 
         return tok.map(one)
 
-    _SIMHASH_UDFS[bits] = kernel
     return kernel
 
 

@@ -11,6 +11,8 @@ probe list*; the bucket id is the shuffle key.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -47,9 +49,6 @@ def cosine_topk_to_query(
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
-_BUCKET_KERNELS: dict = {}
-
-
 def hyperplane_lsh_bucket(vec_col, hyperplanes: list[list[float]]) -> F.Column:
     """Sign-bit bucket id from deterministic hyperplanes (seeded off-line):
     bucket = sum_b (dot(v, h_b) > 0) << b.
@@ -64,29 +63,29 @@ def hyperplane_lsh_bucket(vec_col, hyperplanes: list[list[float]]) -> F.Column:
     contract), at interpreter-bytecode rather than Catalyst-interpreter
     cost.  NULL vector -> bucket 0, matching the former
     when(NULL > 0)->otherwise(0) behavior."""
-    key = tuple(tuple(float(x) for x in h) for h in hyperplanes)
-    if key not in _BUCKET_KERNELS:
-        planes = [list(map(float, h)) for h in hyperplanes]
+    return _bucket_kernel(tuple(tuple(float(x) for x in h) for h in hyperplanes))(vec_col)
 
-        @F.pandas_udf("int")
-        def kernel(vec: pd.Series) -> pd.Series:
-            def one(v):
-                if v is None:
-                    return 0
-                v = v.tolist() if hasattr(v, "tolist") else v  # np scalars 2x slower
-                b = 0
-                for i, h in enumerate(planes):
-                    s = 0.0
-                    for x, y in zip(v, h):
-                        s += x * y
-                    if s > 0:
-                        b += 1 << i
-                return b
 
-            return vec.map(one)
+@functools.lru_cache(maxsize=16)
+def _bucket_kernel(planes: tuple[tuple[float, ...], ...]):
+    @F.pandas_udf("int")
+    def kernel(vec: pd.Series) -> pd.Series:
+        def one(v):
+            if v is None:
+                return 0
+            v = v.tolist() if hasattr(v, "tolist") else v  # np scalars 2x slower
+            b = 0
+            for i, h in enumerate(planes):
+                s = 0.0
+                for x, y in zip(v, h):
+                    s += x * y
+                if s > 0:
+                    b += 1 << i
+            return b
 
-        _BUCKET_KERNELS[key] = kernel
-    return _BUCKET_KERNELS[key](vec_col)
+        return vec.map(one)
+
+    return kernel
 
 
 def make_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -277,11 +276,14 @@ def ann_multitable_pairs(
 def _seq_dot(a: list[float], b: list[float]) -> float:
     """Sequential left-to-right double dot product — bit-identical to both
     the Spark ``aggregate`` fold and DuckDB's ``list_dot_product``, so
-    driver-side probe selection agrees with an SQL oracle exactly.
-    ``sum()`` IS that fold (0 + x0*y0 promotes exactly to x0*y0, then
-    left-to-right float adds) at C speed instead of bytecode speed —
-    the driver-side Lloyd training is a few million of these."""
-    return sum(map(lambda xy: xy[0] * xy[1], zip(a, b)))
+    driver-side probe selection agrees with an SQL oracle exactly.  The
+    fold is spelled out: builtin ``sum()`` of floats is compensated
+    (Neumaier) on Python >= 3.12, a different result on cancelling
+    inputs."""
+    s = 0.0
+    for x, y in zip(a, b):
+        s += x * y
+    return s
 
 
 IVF_SAMPLE_CAP = 2048  # upper bound on driver-collected training rows

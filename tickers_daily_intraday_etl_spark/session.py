@@ -1,11 +1,8 @@
-"""SparkSession factory for the CDC engine.
-
-Local-mode defaults tuned for the sandbox (local[32], single JVM) while the
-configuration knobs mirror what a 1000-executor deployment would set:
-AQE on (runtime skew-join splitting + partition coalescing), Arrow on
-(every Python-side kernel is a vectorized pandas UDF), shuffle partitions
-sized to the parallelism level instead of Spark's 200 default, UTC session
-timezone so results compare bit-for-bit against the DuckDB oracle.
+"""SparkSession configuration for the CDC engine — the one place that
+decides it.  ``ENGINE_CONF`` holds the settings the engine's results and
+files depend on; ``apply_engine_conf`` sets them on any live session.
+``get_spark`` builds a local-mode session sized from the host (CPUs this
+process may run on, a quarter of physical RAM) and applies them.
 """
 
 from __future__ import annotations
@@ -16,13 +13,10 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# Settings the engine's results or its on-disk format depend on, applied
-# by every session builder (``get_spark`` and the spark-submit entry
-# ``run_pipeline.py``).  Sizing and deployment settings (shuffle
-# partitions, memory, UI) stay out: builder config overrides
-# ``spark-submit --conf``, and those belong to the deployment.
+# Settings the engine's results or its on-disk format depend on.  All are
+# runtime SQL confs, so ``apply_engine_conf`` can set them on a session
+# that already runs.  Sizing and deployment settings (shuffle partitions,
+# memory, UI) stay out: those belong to whoever builds the session.
 ENGINE_CONF: dict[str, str] = {
     # results compare bit-for-bit against the DuckDB oracle
     "spark.sql.session.timeZone": "UTC",
@@ -46,41 +40,40 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+def apply_engine_conf(spark: SparkSession) -> SparkSession:
+    """Set every ``ENGINE_CONF`` key on a live session.  The one place
+    package code changes a session setting; ``get_spark``, the
+    spark-submit entry and the driver entry all call it."""
+    for key, value in ENGINE_CONF.items():
+        spark.conf.set(key, value)
+    return spark
+
+
 def get_spark(
     app_name: str = "cdc-engine",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
-
-    ``cpus`` controls ``local[N]`` — the sandbox stand-in for executor
-    count; the bench harness runs the same job at two values (N and 4N)
-    to evidence the scaling-efficiency criterion.
-    """
-    cpus = cpus or DEFAULT_CPUS
+    """Build (or fetch) a local-mode SparkSession with ``ENGINE_CONF``
+    applied.  ``cpus`` (``local[N]``) defaults to the CPUs this process
+    may run on; the driver heap to a quarter of physical RAM (the JVM's
+    own default fraction), overridden by ``SPARK_GRAFT_DRIVER_MEM``."""
+    cpus = cpus or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
-    builder = (
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # parquet + shuffle codecs are tunable: zstd trades CPU per byte
-        # for fewer bytes through the memory subsystem — the relevant
-        # trade on bandwidth-bound hosts (see BENCH/BASELINE.md)
         .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_CODEC", "snappy"),
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, ram_gib // 4)}g",
         )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        .config(map={**ENGINE_CONF, **(extra_conf or {})})
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    apply_engine_conf(spark)
     _ship_package(spark)
     _warm_python_workers(spark, cpus)
     return spark
@@ -152,8 +145,3 @@ def __spark_pkg_fingerprint(pkg_dir: str) -> str:
                 h.update(str(os.path.getmtime(full)).encode())
     return h.hexdigest()[:12]
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
